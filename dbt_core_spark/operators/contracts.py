@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from dbt_core_spark.exceptions import ContractError
+from dbt_core_spark.operators.relations import relation_type
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -122,10 +123,9 @@ def persist_docs(spark: "SparkSession", node: "Node", rel: str) -> None:
     views carry the relation comment as a table property."""
     pd_cfg = node.config.get("persist_docs") or {}
     esc = lambda s: s.replace("'", "\\'")  # noqa: E731
+    rtype = relation_type(spark, rel)
     if pd_cfg.get("relation") and node.description:
-        from dbt_core_spark.operators.relations import relation_type
-
-        if relation_type(spark, rel) == "view":
+        if rtype == "view":
             spark.sql(
                 f"ALTER VIEW {rel} SET TBLPROPERTIES "
                 f"('comment' = '{esc(node.description)}')"
@@ -133,9 +133,7 @@ def persist_docs(spark: "SparkSession", node: "Node", rel: str) -> None:
         else:
             spark.sql(f"COMMENT ON TABLE {rel} IS '{esc(node.description)}'")
     if pd_cfg.get("columns"):
-        from dbt_core_spark.operators.relations import relation_type
-
-        if relation_type(spark, rel) != "table":
+        if rtype != "table":
             return  # Spark views don't support column comments post-hoc
         existing = {f.name for f in spark.table(rel).schema.fields}
         for name, col in node.columns.items():

@@ -33,6 +33,8 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+from dbt_core_spark.operators import relations as R
+
 logger = logging.getLogger(__name__)
 
 GRANTS_TBLPROP = "dbt.grants"
@@ -127,13 +129,11 @@ def _acl_supported(spark: SparkSession) -> bool:
 
 def current_grants(spark: SparkSession, rel: str) -> dict:
     """Grant state recorded on the relation (``dbt.grants`` property)."""
+    raw = R.table_property(spark, rel, GRANTS_TBLPROP)
     try:
-        for r in spark.sql(f"SHOW TBLPROPERTIES {rel}").collect():
-            if r["key"] == GRANTS_TBLPROP:
-                return {k: _coerce(v) for k, v in json.loads(r["value"]).items()}
-    except Exception:
-        pass
-    return {}
+        return {k: _coerce(v) for k, v in json.loads(raw).items()}
+    except Exception:  # unset or malformed: nothing recorded
+        return {}
 
 
 def _ident(name: str) -> str:

@@ -126,7 +126,7 @@ def materialize_incremental(
             # full-partition rewrite (delta_compat.py seam)
             _delta_merge(spark, node, rel, df, unique_key)
             return -1
-        if partition_by and _table_partition_cols(spark, rel) == partition_by:
+        if partition_by and R.partition_columns(spark, rel) == partition_by:
             _partition_scoped_merge(
                 spark, node, rel, df, unique_key, partition_by, fmt
             )
@@ -179,18 +179,11 @@ def _table_size_bytes(spark: SparkSession, rel: str) -> int | None:
     """Best-effort size of ``rel``: catalog statistics when present,
     else a local-filesystem walk of the table location (None on remote
     filesystems — sizing must never cost a Spark job)."""
-    location = None
-    try:
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {rel}").collect():
-            name = (r["col_name"] or "").strip()
-            if name == "Statistics":
-                m = re.search(r"(\d+)\s*bytes", r["data_type"] or "")
-                if m:
-                    return int(m.group(1))
-            elif name == "Location":
-                location = (r["data_type"] or "").strip()
-    except Exception:
-        return None
+    details = R.table_details(spark, rel)
+    m = re.search(r"(\d+)\s*bytes", details.get("Statistics", ""))
+    if m:
+        return int(m.group(1))
+    location = details.get("Location")
     if location:
         parsed = urlparse(location)
         if parsed.scheme in ("file", ""):
@@ -231,26 +224,6 @@ def _warn_unpartitioned_full_rewrite(
             "Iceberg file_format for file-level MERGE.",
             node.unique_id, rel, size / 1024 ** 2,
         )
-
-
-def _table_partition_cols(spark: SparkSession, rel: str) -> list[str]:
-    """Partition columns of ``rel`` as recorded in the catalog."""
-    try:
-        rows = spark.sql(f"DESCRIBE TABLE {rel}").collect()
-    except Exception:
-        return []
-    cols: list[str] = []
-    in_part = False
-    for r in rows:
-        name = (r["col_name"] or "").strip()
-        if name.startswith("# Partition"):
-            in_part = True
-            continue
-        if in_part:
-            if not name or name.startswith("#"):
-                continue
-            cols.append(name)
-    return cols
 
 
 def _partition_literal(v) -> str:
@@ -506,16 +479,6 @@ def materialize_seed(spark: SparkSession, node: Node, rel: str) -> int:
 _MV_FP_PROP = "dbt_mv_fingerprint"
 
 
-def _table_property(spark: SparkSession, rel: str, key: str) -> str | None:
-    try:
-        for r in spark.sql(f"SHOW TBLPROPERTIES {rel}").collect():
-            if r["key"] == key:
-                return r["value"]
-    except Exception:
-        pass
-    return None
-
-
 def _mv_fingerprint(node: Node, sql: str) -> str:
     import hashlib
     import json as _json
@@ -549,7 +512,7 @@ def materialize_materialized_view(
     fp = _mv_fingerprint(node, sql)
     on_change = node.config.get("on_configuration_change", "apply")
     if R.relation_exists(spark, rel):
-        old = _table_property(spark, rel, _MV_FP_PROP)
+        old = R.table_property(spark, rel, _MV_FP_PROP)
         if old is not None and old != fp:
             if on_change == "continue":
                 logger.warning(

@@ -4,6 +4,11 @@ Replaces the reference's adapter relation cache + rename/swap dance
 (ref: task/runnable.py:460-486 cache population; atomic-replace tests
 tests/functional/materializations/test_runtime_materialization.py).
 
+Beyond plain ``tableExists`` checks, this module is the single reader
+of catalog metadata, one Spark call per fact about one relation.  It
+never calls ``catalog.listTables``, which loads every relation in the
+schema: per node, that made a build O(nodes x relations).
+
 Local/test format is **parquet** with a drop+rename swap; on a real
 cluster the same call sites would use Delta/Iceberg `CREATE OR REPLACE
 TABLE` for true atomicity — the strategy layer above is format-agnostic.
@@ -15,6 +20,7 @@ import shutil
 from typing import Optional
 from urllib.parse import urlparse
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -27,24 +33,53 @@ def relation_exists(spark: SparkSession, rel: str) -> bool:
 
 
 def relation_type(spark: SparkSession, rel: str) -> Optional[str]:
-    """'table' | 'view' | None."""
-    if not spark.catalog.tableExists(rel):
+    """'table' | 'view' | None.  Only a persistent ``VIEW`` is a view;
+    managed, external and temporary relations are all 'table'."""
+    try:
+        table = spark.catalog.getTable(rel)
+    except AnalysisException as e:
+        if e.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+            raise
         return None
-    db, _, name = rel.rpartition(".")
-    for t in spark.catalog.listTables(db or None):
-        if t.name == name.strip("`"):
-            return "view" if t.tableType == "VIEW" else "table"
-    return "table"
+    return "view" if table.tableType == "VIEW" else "table"
+
+
+def partition_columns(spark: SparkSession, rel: str) -> list[str]:
+    """Partition columns of ``rel``, in order (``catalog.listColumns``
+    would launch two Spark jobs per call); raises if ``rel`` is gone."""
+    rows = [(r["col_name"] or "").strip()
+            for r in spark.sql(f"DESCRIBE TABLE {rel}").collect()]
+    head = "# Partition Information"
+    tail = rows[rows.index(head) + 1:] if head in rows else []
+    return [c for c in tail if c and not c.startswith("#")]
+
+
+def table_property(spark: SparkSession, rel: str, key: str) -> Optional[str]:
+    """Value of table property ``key``; None when unset or unreadable."""
+    try:
+        rows = spark.sql(f"SHOW TBLPROPERTIES {rel}").collect()
+    except Exception:
+        return None
+    return next((r["value"] for r in rows if r["key"] == key), None)
+
+
+def table_details(spark: SparkSession, rel: str) -> dict[str, str]:
+    """``DESCRIBE TABLE EXTENDED`` as {name: value} (Provider, Location,
+    Statistics, ...; detail rows win over same-named columns) or {}."""
+    try:
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {rel}").collect()
+    except Exception:
+        return {}
+    return {(r["col_name"] or "").strip(): (r["data_type"] or "").strip()
+            for r in rows}
 
 
 def drop_relation(spark: SparkSession, rel: str) -> None:
     # Spark 4 raises WRONG_COMMAND_FOR_OBJECT_TYPE if DROP VIEW hits a
     # table (and vice versa) — inspect the catalog first.
     rtype = relation_type(spark, rel)
-    if rtype == "view":
-        spark.sql(f"DROP VIEW IF EXISTS {rel}")
-    elif rtype == "table":
-        spark.sql(f"DROP TABLE IF EXISTS {rel}")
+    if rtype is not None:
+        spark.sql(f"DROP {rtype.upper()} IF EXISTS {rel}")
 
 
 def write_table(
@@ -74,8 +109,8 @@ def write_table(
     broadcast decisions at real scale)."""
     rtype = relation_type(spark, rel)
     if rtype == "view":
-        drop_relation(spark, rel)
-    if rtype is None:
+        spark.sql(f"DROP VIEW IF EXISTS {rel}")
+    elif rtype is None:
         _clear_orphan_location(spark, rel)
     if sort_by and not (bucket_by and buckets):
         from pyspark.sql import functions as F
@@ -143,7 +178,7 @@ def rebuild_table(
 
 def create_view(spark: SparkSession, rel: str, sql: str) -> None:
     if relation_type(spark, rel) == "table":
-        drop_relation(spark, rel)
+        spark.sql(f"DROP TABLE IF EXISTS {rel}")
     spark.sql(f"CREATE OR REPLACE VIEW {rel} AS {sql}")
 
 
@@ -175,20 +210,12 @@ def compact_table(
     for f in files:
         p = jvm.org.apache.hadoop.fs.Path(f)
         n_bytes += p.getFileSystem(conf).getFileStatus(p).getLen()
-    fmt = "parquet"
-    try:
-        prov = [r for r in spark.sql(f"DESCRIBE EXTENDED {rel}").collect()
-                if r["col_name"] == "Provider"]
-        if prov:
-            fmt = prov[0]["data_type"].lower()
-    except Exception:
-        pass
+    fmt = table_details(spark, rel).get("Provider", "parquet").lower()
     target = max(1, -(-n_bytes // (target_file_mb << 20)))  # ceil
 
     # preserve hive-partition layout: compaction rewrites files WITHIN
     # the partition scheme, it must never flatten it
-    part_cols = [c.name for c in spark.catalog.listColumns(rel)
-                 if c.isPartition]
+    part_cols = partition_columns(spark, rel)
     df = spark.table(rel)
     if zorder_by:
         from dbt_core_spark.operators.layout import zorder_repartition

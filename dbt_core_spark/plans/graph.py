@@ -46,7 +46,17 @@ class Linker:
     @staticmethod
     def add_test_edges(manifest: Manifest, g: nx.DiGraph) -> None:
         """`dbt build` semantics: downstream models wait on upstream tests
-        (ref: compilation.py:197-249)."""
+        (ref: compilation.py:197-249).  A test gates every node with all
+        of its parents upstream, via edges to the first such nodes."""
+        gated: dict[str, set[str]] = {}
+        for uid, node in manifest.nodes.items():
+            if node.resource_type is NodeType.Test and node.depends_on:
+                common = {c for c in set.intersection(*(
+                    nx.descendants(g, p) for p in node.depends_on))
+                    if c in manifest.nodes and c not in node.depends_on
+                    and manifest.nodes[c].resource_type is not NodeType.Test}
+                gated[uid] = {c for c in common
+                              if common.isdisjoint(g.predecessors(c))}
         for uid, node in manifest.nodes.items():
             if node.resource_type is NodeType.UnitTest:
                 # unit tests gate THEIR model: it builds only after the
@@ -60,15 +70,10 @@ class Linker:
                 if target is not None:
                     g.add_edge(uid, target)
                 continue
-            if node.resource_type is not NodeType.Test:
-                continue
-            for parent in node.depends_on:
-                for child in list(g.successors(parent)):
-                    if child != uid and manifest.nodes.get(child) is not None:
-                        if manifest.nodes[child].resource_type is not NodeType.Test:
-                            g.add_edge(uid, child)
+            for child in gated.get(uid, ()):
+                g.add_edge(uid, child)
         cycles = Linker.find_cycles(g)
-        if cycles:  # pragma: no cover — test edges can't create cycles
+        if cycles:
             raise DagCycleError(f"test edges created a cycle: {cycles}")
 
 

@@ -433,12 +433,11 @@ class GraphRunner:
 
                 persist_docs(self.spark, node, rel)
             if node.config.get("grants") is not None:
-                from dbt_core_spark.operators import relations as R2
                 from dbt_core_spark.operators.grants import apply_grants
 
                 apply_grants(
                     self.spark, rel, node.config["grants"],
-                    relation_kind=R2.relation_type(self.spark, rel) or "table",
+                    relation_kind=R.relation_type(self.spark, rel) or "table",
                 )
             self._node_hooks(node, "post_hook")
             return NodeResult(node.unique_id, status, time.time() - t0, msg, rel)

@@ -44,9 +44,10 @@ def clone_relations(
             continue
         src = f"{state_schema}.{node.identifier}"
         dst = f"{target_schema}.{node.identifier}"
-        if not spark.catalog.tableExists(src):
+        src_type = R.relation_type(spark, src)
+        if src_type is None:
             continue
-        if R.relation_type(spark, src) == "view":
+        if src_type == "view":
             R.create_view(spark, dst, f"select * from {src}")
         else:
             R.drop_relation(spark, dst)

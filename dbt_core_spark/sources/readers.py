@@ -26,10 +26,10 @@ def register_source(spark: SparkSession, node: Node, schema: str) -> str:
     if loc.startswith("catalog:"):
         return loc[len("catalog:"):]
     db = f"{schema}__sources"
-    R.ensure_database(spark, db)
     rel = f"{db}.{node.source_name}__{node.name}"
     fmt = (node.external_format or "parquet").lower()
     if not spark.catalog.tableExists(rel):
+        R.ensure_database(spark, db)
         if fmt == "csv":
             spark.sql(
                 f"CREATE TABLE {rel} USING CSV "

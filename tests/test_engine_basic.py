@@ -93,6 +93,79 @@ def test_relationships_test(spark, schema, sf_dir):
     assert res.results[0].status == "pass"
 
 
+def test_build_relationships_to_upstream_model(spark, schema, sf_dir):
+    """A relationships test whose `to` model feeds the tested model gates
+    the tested model's children, and never the tested model itself."""
+    p = tpch_project(sf_dir)
+    p.models["customers"] = """
+        select c_custkey as customer_id from {{ source('tpch', 'customer') }}
+        where c_custkey > {{ var('min_custkey', -1) }}
+    """
+    p.models["cust_orders"] = """
+        select o.order_id, o.customer_id
+        from {{ ref('stg_orders') }} o
+        left join {{ ref('customers') }} c on o.customer_id = c.customer_id
+    """
+    p.models["cust_order_counts"] = """
+        select customer_id, count(*) as n from {{ ref('cust_orders') }}
+        group by 1
+    """
+    p.tests["rel_upstream"] = {
+        "type": "relationships", "model": "cust_orders",
+        "column": "customer_id", "to": "ref('customers')",
+        "field": "customer_id"}
+    res = Engine(spark, p, schema=schema).build()
+    assert res.ok(), [r.message for r in res.results if r.status != "success"]
+    status = {r.unique_id.split(".")[-1]: r.status for r in res.results}
+    assert status["rel_upstream"] == "pass"
+    assert status["cust_order_counts"] == "success"
+
+    # orphaned customer ids fail the test: the tested model still
+    # builds, its child is skipped
+    res = Engine(spark, p, schema=schema, vars={"min_custkey": 10}).build()
+    status = {r.unique_id.split(".")[-1]: r.status for r in res.results}
+    assert status["cust_orders"] == "success"
+    assert status["rel_upstream"] == "fail"
+    assert status["cust_order_counts"] == "skipped"
+
+
+def test_build_two_parent_test_gates_common_descendants(spark, schema, sf_dir):
+    """A test on two independent models gates the nodes downstream of
+    both, even when no direct child of either reads both: a failing
+    test skips `mart`, while nodes that read only one parent build."""
+    p = tpch_project(sf_dir)
+    p.models["customers"] = """
+        select c_custkey as customer_id from {{ source('tpch', 'customer') }}
+        where c_custkey > {{ var('min_custkey', -1) }}
+    """
+    p.models["orders_enriched"] = """
+        select order_id, customer_id from {{ ref('stg_orders') }}
+    """
+    p.models["customers_enriched"] = """
+        select customer_id from {{ ref('customers') }}
+    """
+    p.models["mart"] = """
+        select o.order_id, c.customer_id
+        from {{ ref('orders_enriched') }} o
+        join {{ ref('customers_enriched') }} c on o.customer_id = c.customer_id
+    """
+    p.tests["rel_orders_customers"] = {
+        "type": "relationships", "model": "stg_orders",
+        "column": "customer_id", "to": "ref('customers')",
+        "field": "customer_id"}
+    res = Engine(spark, p, schema=schema, vars={"min_custkey": 10}).build()
+    status = {r.unique_id.split(".")[-1]: r.status for r in res.results}
+    assert status["rel_orders_customers"] == "fail"
+    assert status["mart"] == "skipped"
+    assert status["orders_enriched"] == "success"
+    assert status["customers_enriched"] == "success"
+
+    res = Engine(spark, p, schema=schema).build()
+    assert res.ok(), [r.message for r in res.results if r.status != "success"]
+    assert {r.unique_id.split(".")[-1]: r.status
+            for r in res.results}["mart"] == "success"
+
+
 def test_store_failures(spark, schema, sf_dir):
     p = tpch_project(sf_dir)
     p.tests["fail_store"] = {

@@ -132,3 +132,17 @@ def test_grants_on_view(spark, schema):
     eng = Engine(spark, p, schema=schema)
     assert eng.run().ok()
     assert current_grants(spark, f"{schema}.my_model") == {"select": ["viewer"]}
+
+
+def test_malformed_grants_property_reads_as_no_grants(spark, schema):
+    """A hand-edited dbt.grants property that is not a JSON object is
+    treated as no recorded grants, so apply_grants regrants from scratch."""
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS `{schema}`")
+    rel = f"{schema}.hand_edited"
+    spark.sql(f"CREATE TABLE {rel} (a INT) USING parquet")
+    for bad in ("not json", "[1, 2]"):
+        spark.sql(f"ALTER TABLE {rel} SET TBLPROPERTIES ('dbt.grants' = '{bad}')")
+        assert current_grants(spark, rel) == {}
+    res = apply_grants(spark, rel, {"select": ["reporter"]})
+    assert res["granted"] == {"select": ["reporter"]}
+    assert current_grants(spark, rel) == {"select": ["reporter"]}
